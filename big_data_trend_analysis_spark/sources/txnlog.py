@@ -242,6 +242,7 @@ class TxnLog:
         file_partitions: dict[str, dict[str, str]] | None = None,
         file_stats: dict[str, dict[str, list]] | None = None,
         committed_at: str | None = None,
+        compacted_from: dict[str, list[str]] | None = None,
     ) -> int:
         """Publish snapshot ``expected_version + 1`` atomically.
 
@@ -277,6 +278,13 @@ class TxnLog:
         ``snapshot_files(partition_filter=...)`` can prune old-spec
         and new-spec files each by their own recorded values.
         ``None`` inherits the parent's spec / carries its values.
+
+        ``compacted_from`` ({added file: the removed files it was
+        rewritten from, row for row}) is recorded in THIS manifest only
+        and never carried forward: it is a fact about this commit, which
+        the bloom sidecar uses to OR the members' blooms instead of
+        scanning the new file. Only ``compact`` may claim it — a
+        merge rewrite has the same add/remove shape but changed rows.
         """
         if expected_version is None:
             expected_version = self.latest_version()
@@ -359,6 +367,8 @@ class TxnLog:
             "file_stats": stats or None,
             "committed_at": committed_at,
         }
+        if compacted_from:
+            body["compacted_from"] = compacted_from
         staged = os.path.join(self.log_path, f".tmp-{uuid.uuid4().hex}.json")
         with open(staged, "w") as f:
             json.dump(body, f)
@@ -734,6 +744,12 @@ class TxnLog:
         second compact is a cheap no-op (Delta's idempotence
         contract).
 
+        Each group rewritten into one file records its members in the
+        manifest's ``compacted_from``, and every new file keeps zone
+        maps (footer min/max) for the columns all its members had
+        stats for — a footer read, not a data scan — so
+        ``range_filter`` still prunes after an OPTIMIZE.
+
         Returns ``{"version", "files_before", "files_after",
         "files_rewritten"}``; ``version`` is -1 when nothing needed
         rewriting (no commit is made).
@@ -742,6 +758,7 @@ class TxnLog:
         man = self.manifest(latest)
         files = list(man["files"])
         fparts = man.get("file_partitions") or {}
+        fstats = man.get("file_stats") or {}
         groups: dict[tuple, list[str]] = {}
         for f in files:
             key = tuple(sorted((fparts.get(f) or {}).items()))
@@ -749,6 +766,8 @@ class TxnLog:
         add: list[str] = []
         remove: list[str] = []
         new_parts: dict[str, dict[str, str]] = {}
+        new_stats: dict[str, dict[str, list]] = {}
+        compacted_from: dict[str, list[str]] = {}
         commit_id = uuid.uuid4().hex[:12]
         schema_json = man.get("schema")
         n_group = 0
@@ -769,16 +788,25 @@ class TxnLog:
             n_group += 1
             out = os.path.join(self.root, rel_dir)
             df.repartition(target_files).write.mode("error").parquet(out)
-            for dirpath, _, names in os.walk(out):
-                for name in names:
-                    if not name.endswith(".parquet"):
-                        continue
-                    rel = os.path.relpath(
-                        os.path.join(dirpath, name), self.root
-                    )
-                    add.append(rel)
-                    if key:
-                        new_parts[rel] = dict(key)
+            written = sorted(
+                os.path.relpath(os.path.join(dirpath, name), self.root)
+                for dirpath, _, names in os.walk(out)
+                for name in names
+                if name.endswith(".parquet")
+            )
+            stat_cols = set.intersection(
+                *(set(fstats.get(f) or {}) for f in members)
+            )
+            for rel in written:
+                if key:
+                    new_parts[rel] = dict(key)
+                if stat_cols and (
+                    st := self._footer_stats(rel, sorted(stat_cols))
+                ):
+                    new_stats[rel] = st
+            if len(written) == 1:
+                compacted_from[written[0]] = sorted(members)
+            add.extend(written)
             remove.extend(members)
         if not add:
             return {
@@ -793,7 +821,9 @@ class TxnLog:
             remove=remove,
             expected_version=latest,
             file_partitions=new_parts or None,
+            file_stats=new_stats or None,
             committed_at=committed_at,
+            compacted_from=compacted_from or None,
         )
         return {
             "version": version,

@@ -327,6 +327,45 @@ def test_txnlog_compact_respects_partition_groups(spark, tmp_path):
     assert log.compact(spark, target_files=1)["version"] == -1
 
 
+def test_txnlog_compact_keeps_zone_maps(spark, tmp_path):
+    """Compacted files carry footer min/max for the columns every
+    member had stats for, so a range probe still prunes after an
+    OPTIMIZE."""
+    from big_data_trend_analysis_spark.sources.txnlog import TxnLog
+
+    log = TxnLog(str(tmp_path / "t"))
+    # two partition groups with disjoint id ranges
+    df = spark.range(100).selectExpr("id", "IF(id < 50, 'low', 'high') AS band")
+    for lo, hi in ((0, 25), (25, 50), (50, 75), (75, 100)):
+        log.write_commit(
+            df.filter(f"id >= {lo} AND id < {hi}"),
+            partition_by=["band"],
+            collect_stats=["id"],
+        )
+    assert len(log.snapshot_files(range_filter={"id": (10, 20)})) == 1
+    stats = log.compact(spark, target_files=1)
+    assert stats["files_before"] == 4 and stats["files_after"] == 2
+    man = log.manifest(stats["version"])
+    assert sorted(man["file_stats"][f]["id"] for f in man["files"]) == [
+        [0, 49],
+        [50, 99],
+    ]
+    kept = log.snapshot_files(range_filter={"id": (10, 20)})
+    assert len(kept) == 1
+    assert (
+        log.read_snapshot(spark, range_filter={"id": (10, 20)})
+        .filter("id BETWEEN 10 AND 20")
+        .count()
+        == 11
+    )
+    # a column only some members carried stats for gets none
+    log.write_commit(df.filter("id < 10"), partition_by=["band"])
+    log.write_commit(df.filter("id < 10"), partition_by=["band"])
+    v = log.compact(spark, target_files=1)["version"]
+    (low,) = log.manifest(v)["added"]  # only the 'low' group is rewritten
+    assert low not in log.manifest(v)["file_stats"]
+
+
 # --------------------------------------------------------- TPC-H plans
 
 
